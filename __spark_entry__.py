@@ -434,11 +434,12 @@ def q_kcore(spark, sf_dir):
 
 
 def q_coreness(spark, sf_dir):
-    """Full k-core decomposition (per-vertex core number) via the
-    iterated h-index fixed point (operators/kcore.py::coreness); the
-    oracle replicates the SAME iteration as a recursive CTE with a
-    change-count guard, so both engines stop at the identical fixed
-    point (which IS coreness — Lü et al. 2016)."""
+    """Full k-core decomposition (per-vertex core number) by
+    operators/kcore.py::coreness (an exact in-task peel under its row
+    bound, the iterated h-index fixed point above it); the oracle runs
+    the h-index iteration as a recursive CTE with a change-count guard,
+    and its fixed point IS coreness (Lü et al. 2016), so both engines
+    give identical values."""
     from hypergraph_gpu_label_propagation_spark.operators.kcore import coreness
 
     hg = _freeze(spark, sf_dir)
@@ -1964,11 +1965,6 @@ def _sql_simhash() -> str:
         f"bits AS (SELECT doc_id, {sums} FROM hsh GROUP BY doc_id) "
         f"SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST({acc} AS BIGINT) AS simhash FROM bits"
     )
-
-
-def _dh60(expr: str) -> str:
-    """DuckDB twin of operators.dedup.h60 (60-bit md5 prefix)."""
-    return f"('0x' || substr(md5({expr}), 1, 15))::BIGINT"
 
 
 def _sql_graph_sampling() -> str:

@@ -211,7 +211,12 @@ class Hypergraph:
             by_edge.count()
             pre.unpersist()
             if need_ne:
-                num_edges = by_edge.select("edge_id").distinct().count()
+                # a null edge_id (a non-numeric id cast to long) is no
+                # edge: count_distinct semantics, still exchange-free
+                num_edges = (
+                    by_edge.where(F.col("edge_id").isNotNull())
+                    .select("edge_id").distinct().count()
+                )
         salted_by_vertex = salted_by_edge = None
         if salt > 1:
             salted_by_vertex = (

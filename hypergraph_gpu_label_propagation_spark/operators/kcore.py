@@ -17,6 +17,12 @@ O(convergence rounds) supersteps instead of O(max-degree) peel levels,
 which is the right shape at 100 TB (rounds ~ tens; peel levels can be
 thousands on heavy-tailed graphs).
 
+Below a row bound (``CORENESS_LOCAL_MAX_ROWS``) :func:`coreness` skips
+the rounds altogether: the whole adjacency goes to ONE task, which runs
+the exact level peel with vectorized NumPy (:func:`peel_coreness`).  A
+peel level is microseconds of array work there, where as a Spark round
+it paid the fixed per-round cost (BENCH_SCALING.md "In-task peel").
+
 Execution shape (same discipline as LP/CC, label_propagation.py):
 - adjacency built once, localCheckpointed (GC-reclaimed);
 - per round: one degree aggregation over alive edges + one semi-join —
@@ -33,14 +39,20 @@ shrinks (same guard pattern as the pagerank_converged twin).
 from __future__ import annotations
 
 import time
+from collections.abc import Iterator
 from dataclasses import dataclass, field
+from typing import TYPE_CHECKING
 
+import numpy as np
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from hypergraph_gpu_label_propagation_spark.model import Hypergraph
 from hypergraph_gpu_label_propagation_spark.operators.triangles import clique_expansion
 from hypergraph_gpu_label_propagation_spark.plans.tuning import loop_conf, loop_partitions
+
+if TYPE_CHECKING:
+    import pandas as pd
 
 
 @dataclass
@@ -137,6 +149,149 @@ class CorenessResult:
     coreness: DataFrame  # (vertex_id, coreness: int), one row per vertex
     iterations: int
     changes_per_iter: list[int] = field(default_factory=list)
+
+
+# In-task peel bound: symmetrized adjacency rows (2 x the u < v pairs) at
+# or under this run as ONE exact NumPy peel inside one task; above it
+# the Spark sweep loop runs.  The peel's peak is 49-57 B per directed
+# row (the pairs, their inverse ids, the CSR index and the sort
+# permutation; tracemalloc on the sf0.1 adjacency and on a 1.2M-row
+# random graph), so ~460 MB at the bound.
+# Conf-overridable (0 forces the sweeps) through
+# `spark.graft.coreness.local.maxRows`.
+CORENESS_LOCAL_MAX_ROWS = 8_000_000
+
+
+def _coreness_local_rows(spark) -> int:
+    try:
+        return int(
+            spark.conf.get(
+                "spark.graft.coreness.local.maxRows", str(CORENESS_LOCAL_MAX_ROWS)
+            )
+        )
+    except Exception:  # noqa: BLE001 — conservative: keep default
+        return CORENESS_LOCAL_MAX_ROWS
+
+
+def peel_coreness(u: np.ndarray, v: np.ndarray) -> tuple[np.ndarray, np.ndarray, int]:
+    """Exact core numbers of the undirected graph with edges (u[i], v[i])
+    by the Batagelj-Zaversnik level peel, vectorized per removal batch.
+
+    Returns ``(ids, core, batches)``: every id that appears in ``u`` or
+    ``v`` (sorted), its core number, and the number of removal batches.
+    Ids are mapped densely with ``np.unique``, so any int64 id works.
+    ``u``/``v`` must hold each undirected edge once, without self-loops
+    (the clique expansion's distinct u < v pairs).
+
+    At level k every alive vertex with alive-degree <= k is removed in
+    one batch and gets core k; its alive neighbours lose one degree per
+    removed neighbour (``np.subtract.at``).  Only those neighbours can
+    newly drop to <= k, so the next batch is read off them; when none
+    does, k rises to the minimum alive degree.  Each directed adjacency
+    row is gathered once, so the peel is O(rows) plus one O(alive) scan
+    per distinct level, plus ~25 us of fixed NumPy cost per batch.  The
+    batch count is the cascade depth: 144 on the sf0.1 adjacency, but
+    one per two vertices on a path (a 2M-vertex path peels in ~25 s on
+    a 4-core host), the worst case under the row bound.
+    """
+    ids, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
+    n, m = len(ids), len(u)
+    # CSR of the symmetrized adjacency: row i lists i's neighbours
+    # (inv is the source column of both directions, u-side then v-side)
+    nbr = np.concatenate([inv[m:], inv[:m]])[np.argsort(inv, kind="stable")]
+    deg = np.bincount(inv, minlength=n)
+    del inv
+    indptr = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(deg, out=indptr[1:])
+    core = np.zeros(n, dtype=np.int32)
+    alive = np.ones(n, dtype=bool)
+    rest = np.arange(n)
+    frontier = rest[:0]
+    k = 0
+    batches = 0
+    while True:
+        if frontier.size == 0:
+            rest = rest[alive[rest]]
+            if rest.size == 0:
+                break
+            # next level: every alive degree already exceeds the old k
+            k = int(deg[rest].min())
+            frontier = rest[deg[rest] <= k]
+        batches += 1
+        core[frontier] = k
+        alive[frontier] = False
+        # gather the frontier's CSR rows in one fancy index
+        lo = indptr[frontier]
+        cnt = indptr[frontier + 1] - lo
+        first = np.repeat(lo - (np.cumsum(cnt) - cnt), cnt)
+        nb = nbr[first + np.arange(first.size)]
+        nb = nb[alive[nb]]
+        np.subtract.at(deg, nb, 1)
+        frontier = np.unique(nb[deg[nb] <= k])
+    return ids, core, batches
+
+
+def _peel_task(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """mapInPandas body of the in-task path: every (u, v) pair of the
+    graph arrives in this one partition; emit (u, c) per non-isolated
+    vertex in Arrow-sized slices."""
+    # imported here, in the worker: pandas adds ~0.4 s to the package
+    # import, and only this task body needs it
+    import pandas as pd
+
+    us, vs = [], []
+    for pdf in batches:
+        us.append(pdf["u"].to_numpy(dtype=np.int64))
+        vs.append(pdf["v"].to_numpy(dtype=np.int64))
+    if not us:
+        return
+    ids, core, _ = peel_coreness(np.concatenate(us), np.concatenate(vs))
+    step = 1 << 20
+    for lo in range(0, len(ids), step):
+        yield pd.DataFrame({"u": ids[lo : lo + step], "c": core[lo : lo + step]})
+
+
+def _coreness_in_task(
+    hg: Hypergraph, half: DataFrame, checkpoint_dir: str | None, verbose: bool
+) -> CorenessResult:
+    """The under-bound path of :func:`coreness`: one task peels the whole
+    adjacency; the result joins the vertex universe (isolated vertices
+    get 0) and is materialized once."""
+    t0 = time.monotonic()
+    peeled = (
+        half.select("u", "v")
+        .repartition(1)
+        .mapInPandas(_peel_task, "u long, c int")
+    )
+    # adaptive execution off: it submits every query stage as its own
+    # job (7 jobs per call measured with it on, 4 with it off)
+    with loop_conf(hg.spark, hg.spark.sparkContext.defaultParallelism):
+        out = (
+            hg.vertices()
+            .join(peeled.select(F.col("u").alias("vertex_id"), "c"), "vertex_id", "left")
+            .select("vertex_id", F.coalesce("c", F.lit(0)).cast("int").alias("coreness"))
+            .localCheckpoint(eager=True)
+        )
+    if checkpoint_dir:
+        from hypergraph_gpu_label_propagation_spark.plans.checkpointing import (
+            write_snapshot,
+        )
+
+        # one converged snapshot in the sweep loop's (u, c, _ch) shape;
+        # a vertex with an edge has coreness >= 1, so the filter keeps
+        # exactly the adjacency universe the sweep snapshots carry
+        write_snapshot(
+            out.filter(F.col("coreness") > 0).select(
+                F.col("vertex_id").alias("u"),
+                F.col("coreness").alias("c"),
+                F.lit(0).alias("_ch"),
+            ),
+            checkpoint_dir, "coreness", 1,
+            {"op": "coreness", "superstep": 1, "changes": 0},
+        )
+    if verbose:
+        print(f"[coreness] in-task peel {time.monotonic() - t0:.2f}s")
+    return CorenessResult(coreness=out, iterations=1, changes_per_iter=[0])
 
 
 def _h_sweep(scope, values, sweep: str, w, broadcast_values: bool = False) -> DataFrame:
@@ -322,7 +477,29 @@ def coreness(
     verbose: bool = False,
 ) -> CorenessResult:
     """Per-vertex core number of the co-occurrence graph (full k-core
-    decomposition) by the iterated h-index fixed point (module doc).
+    decomposition).
+
+    Dispatch on the symmetrized adjacency size (2 x the u < v pairs,
+    one count of ``adj``):
+
+    - **At or under** ``CORENESS_LOCAL_MAX_ROWS`` (8M rows; conf
+      ``spark.graft.coreness.local.maxRows``): ONE task gets every pair
+      (``repartition(1).mapInPandas``) and runs the exact level peel in
+      NumPy (:func:`peel_coreness`).  Bound from memory: the peel's
+      peak is at most ~57 B per directed row, so ~460 MB of worker
+      memory at 8M rows.  The result left-joins the vertex universe
+      (isolated vertices get 0) and is localCheckpointed.
+      ``iterations`` is 1 and ``changes_per_iter`` is ``[0]``; with
+      ``checkpoint_dir`` one converged snapshot (``_ch`` = 0) is
+      written, and ``resume`` recomputes.  The sweep knobs below do
+      not apply.  Measured on a 4-core host (BENCH_SCALING.md "In-task
+      peel"): the sf0.1 adjacency (2.39M rows) peels in 144 batches,
+      0.4-0.55 s including the CSR build.  On the perfbench
+      motifs_skewed graph a call runs 4 Spark jobs; the sweeps ran 56.
+    - **Above the bound** (sf1 is ~24M rows): the iterated h-index
+      fixed point (module doc) as Spark sweeps, described below.  Both
+      paths give identical values (tests force the fallback with a
+      0-row bound and compare).
 
     Per round: one (v -> neighbor values) join against the checkpointed
     adjacency, one window ranked by value within each vertex partition
@@ -488,7 +665,11 @@ def coreness(
     if fused_steps_pruned is None:
         fused_steps_pruned = fused_steps
     cores = hg.spark.sparkContext.defaultParallelism
-    half = clique_expansion(hg) if adj is None else adj
+    half = clique_expansion(hg).localCheckpoint(eager=True) if adj is None else adj
+    # symmetrized rows = 2 x the u < v pairs (union all, no distinct)
+    n_pairs = 2 * half.count()
+    if n_pairs <= _coreness_local_rows(hg.spark):
+        return _coreness_in_task(hg, half, checkpoint_dir, verbose)
     # pre-partition the symmetrized adjacency ONCE, on the key the
     # per-sweep plan needs (r08): under broadcast-gather that is the
     # AGGREGATION key ``u`` — the values broadcast on ``v`` and the
@@ -502,14 +683,12 @@ def coreness(
     # and incidence-based sizing left 24M adjacency rows in 12
     # partitions at sf1 — spill-bound rounds (coreness 128.7 s; fixed
     # sizing + the triangles fix measured in BENCH_SCALING.md r05).
-    # The count scans the materialized checkpoint blocks (cheap); the
-    # extra transient copy is released immediately after the
+    # The extra transient copy is released immediately after the
     # repartition.
     sym = (
         half.unionByName(half.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .localCheckpoint(eager=True)
     )
-    n_pairs = sym.count()
     n_part = loop_partitions(n_pairs, cores)
     narrow_ids = 0 < hg.num_vertices < 2**31
     if narrow_ids:

@@ -131,6 +131,7 @@ def k_truss(
         # wedge intermediate is then never exchanged; over the
         # threshold the r06 shuffle shape runs unchanged
         from hypergraph_gpu_label_propagation_spark.operators.triangles import (
+            _packed_key,
             _triangles_broadcast_rows,
         )
 
@@ -145,15 +146,9 @@ def k_truss(
             # triangles._oriented_triangles) — base pairs are unique so
             # the inner join's multiplicity is unchanged
             tri0 = (
-                wedges0.withColumn(
-                    "_uw", F.shiftleft(F.col("u"), 32) + F.col("w")
-                )
+                wedges0.withColumn("_uw", _packed_key("u", "w"))
                 .join(
-                    F.broadcast(
-                        base.select(
-                            (F.shiftleft(F.col("u"), 32) + F.col("v")).alias("_uw")
-                        )
-                    ),
+                    F.broadcast(base.select(_packed_key("u", "v").alias("_uw"))),
                     "_uw",
                 )
                 .drop("_uw")

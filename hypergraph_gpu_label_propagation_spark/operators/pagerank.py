@@ -61,11 +61,13 @@ def _walk_gather(hg: Hypergraph, state: DataFrame) -> DataFrame:
     # broadcast against the layout partitioned by the aggregation key,
     # so both gathers run with ZERO E-sized exchanges per iteration;
     # big frames (or salted layouts) fall back to the co-partitioned
-    # shuffle path — exact either way, sum/count are algebraic.  The
-    # FP sum order within each edge/vertex group is the same
-    # partial/final aggregation either way (one partition holds the
-    # whole group pre-aggregation under broadcast), and every board
-    # row rounds to 6 decimals with tol bounds far below that.
+    # shuffle path — sum/count are algebraic.  The two paths split
+    # each edge/vertex group into different partial aggregates (the
+    # whole group in one partition under broadcast, merged
+    # per-partition partials on the shuffle path), so ranks can differ
+    # in the last ULPs and a run near tol can stop one iteration apart;
+    # that is bounded by the board's 6-decimal rounding, and the parity
+    # test asserts abs=1e-12, not bit equality.
     edge_mass = (
         hg.gather_to_edge(contrib)
         .groupBy("edge_id")

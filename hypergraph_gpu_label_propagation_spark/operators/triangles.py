@@ -64,6 +64,15 @@ def _triangles_broadcast_rows(spark) -> int:
         return TRIANGLES_BROADCAST_MAX_ROWS
 
 
+def _packed_key(hi: str, lo: str):
+    """(hi << 32) + lo as one long key, injective for ids in [0, 2^31).
+
+    Both columns are cast to long first: shiftleft keeps an int
+    column's type and masks the shift to 5 bits, so an int ``hi << 32``
+    is ``hi`` itself and the key collapses to hi + lo."""
+    return F.shiftleft(F.col(hi).cast("long"), 32) + F.col(lo).cast("long")
+
+
 def _oriented_triangles(
     adj: DataFrame, n_pairs: int, max_id: int | None = None
 ) -> DataFrame:
@@ -83,13 +92,9 @@ def _oriented_triangles(
         wedges = adj.join(F.broadcast(right), "v")
         if max_id is not None and 0 < max_id < 2**31:
             # (u << 32) | w is injective for dense non-negative ids
-            closing_packed = adj.select(
-                (F.shiftleft(F.col("u"), 32) + F.col("v")).alias("_uw")
-            )
+            closing_packed = adj.select(_packed_key("u", "v").alias("_uw"))
             return (
-                wedges.withColumn(
-                    "_uw", F.shiftleft(F.col("u"), 32) + F.col("w")
-                )
+                wedges.withColumn("_uw", _packed_key("u", "w"))
                 .join(F.broadcast(closing_packed), "_uw", "left_semi")
                 .drop("_uw")
             )

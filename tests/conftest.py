@@ -15,6 +15,16 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def coreness_sweeps(spark):
+    """Force coreness onto its Spark sweep path: with a 0-row in-task
+    bound every graph is over it, so sweep-only behaviour (fusing,
+    sweep modes, rounds, resume) stays pinned."""
+    spark.conf.set("spark.graft.coreness.local.maxRows", "0")
+    yield
+    spark.conf.unset("spark.graft.coreness.local.maxRows")
+
+
 def incidence_from_edges(spark, edges):
     """Build an incidence DataFrame from a python list-of-lists."""
     rows = [(e, int(v)) for e, members in enumerate(edges) for v in members]

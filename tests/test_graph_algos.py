@@ -222,6 +222,84 @@ def test_coreness_random_matches_peel(spark):
     hg.unpersist()
 
 
+def test_coreness_in_task_peel_equals_forced_sweeps_and_peel(spark):
+    """The under-bound in-task peel and the Spark sweeps (forced with a
+    0-row bound) are two algorithms for one answer: both must equal the
+    reference peel, isolated vertices (no co-occurrence edge) included."""
+    from hypergraph_gpu_label_propagation_spark.operators.kcore import coreness
+
+    nv = 48  # vertices 40..47 appear in no edge
+    edges = _rng_hypergraph(23, nv=40, ne=90)
+    hg = _freeze(spark, edges, nv)
+    want = _peel_coreness(edges, nv)
+    assert want[40:] == [0] * 8 and max(want) > 2
+
+    def values(res):
+        got = [None] * nv
+        for r in res.coreness.collect():
+            got[r["vertex_id"]] = r["coreness"]
+        return got
+
+    local = coreness(hg)
+    try:
+        spark.conf.set("spark.graft.coreness.local.maxRows", "0")
+        swept = coreness(hg)
+    finally:
+        spark.conf.unset("spark.graft.coreness.local.maxRows")
+    assert values(local) == want
+    assert values(swept) == want
+    # the in-task path is one exact round; the sweeps need several
+    assert (local.iterations, local.changes_per_iter) == (1, [0])
+    assert swept.iterations > 1 and swept.changes_per_iter[-1] == 0
+    hg.unpersist()
+
+
+def test_peel_coreness_arrays_wide_ids():
+    """The NumPy peel maps ids with np.unique, so ids past 2^31 work."""
+    from hypergraph_gpu_label_propagation_spark.operators.kcore import peel_coreness
+
+    edges = _rng_hypergraph(5, nv=30, ne=60)
+    want = _peel_coreness(edges, 30)
+    pairs = sorted({(a, b) for ms in edges for a in ms for b in ms if a < b})
+    base = 3 * 2**33
+    u = np.array([a for a, _ in pairs], dtype=np.int64) * 2**32 + base
+    v = np.array([b for _, b in pairs], dtype=np.int64) * 2**32 + base
+    ids, core, batches = peel_coreness(u, v)
+    got = dict(zip(((ids - base) // 2**32).tolist(), core.tolist()))
+    assert [got.get(x, 0) for x in range(30)] == want
+    assert 1 <= batches <= len(ids)
+
+
+def test_int_and_long_adjacency_same_triangles_and_truss(spark):
+    """The packed (u << 32) + w closing key must be built from longs:
+    an IntegerType adjacency used to pack to u + w and overcount."""
+    from pyspark.sql import functions as F
+
+    from hypergraph_gpu_label_propagation_spark.operators.ktruss import k_truss
+    from hypergraph_gpu_label_propagation_spark.operators.triangles import (
+        clique_expansion,
+    )
+
+    nv = 40
+    edges = _rng_hypergraph(3, nv=nv, ne=80)
+    hg = _freeze(spark, edges, nv)
+    adj_long = clique_expansion(hg).localCheckpoint(eager=True)
+    adj_int = adj_long.select(
+        F.col("u").cast("int").alias("u"), F.col("v").cast("int").alias("v")
+    ).localCheckpoint(eager=True)
+    n_long = triangle_count(hg, adj=adj_long).collect()[0][0]
+    n_int = triangle_count(hg, adj=adj_int).collect()[0][0]
+    assert n_long == n_int == oracle_triangle_count(edges, nv)
+
+    def members(adj):
+        rows = k_truss(hg, k=4, adj=adj).membership.collect()
+        return {(int(r["u"]), int(r["v"])) for r in rows if r["in_truss"] == 1}
+
+    truss_long = members(adj_long)
+    assert truss_long and members(adj_int) == truss_long
+    hg.unpersist()
+
+
 def test_personalized_pagerank(spark):
     from hypergraph_gpu_label_propagation_spark.operators.pagerank import (
         personalized_pagerank,
@@ -543,7 +621,7 @@ def test_ranked_top_hot_key_cap_is_exact(spark):
     hg.unpersist()
 
 
-def test_coreness_fused_steps_equivalent(spark):
+def test_coreness_fused_steps_equivalent(spark, coreness_sweeps):
     """fused_steps applies K h-index steps per materialized round; the
     fixed point (and therefore every coreness value) must be identical
     to the step-per-round run — monotone non-increasing values make the
@@ -569,7 +647,7 @@ def test_coreness_fused_steps_equivalent(spark):
     hg.unpersist()
 
 
-def test_coreness_sweep_modes_identical(spark):
+def test_coreness_sweep_modes_identical(spark, coreness_sweeps):
     """The three sweep implementations are the SAME Jacobi iteration:
     "hist" (histogram + window), "arr" (single-exchange sorted-array
     h), and "auto" (arr full sweeps, then incremental histogram

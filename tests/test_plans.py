@@ -123,7 +123,7 @@ def test_loop_conf_restores_on_error(spark):
     assert loop_partitions(10**12, 32) == 64  # cap 2x cores (round-4 A/B)
 
 
-def test_iterative_state_stats_stay_linear(spark):
+def test_iterative_state_stats_stay_linear(spark, coreness_sweeps):
     """r05 verdict #4: the BigInt-stats planning pathology as a pytest.
 
     localCheckpoint (LogicalRDD) PRESERVES origin sizeInBytes and
@@ -135,7 +135,8 @@ def test_iterative_state_stats_stay_linear(spark):
     budgets and assert the per-round bit growth is a small constant —
     a squaring shape multiplies bits by 2^(extra rounds) and fails
     unmistakably.  Referenced from label_propagation.py / components.py
-    / kcore.py / ktruss.py loop comments.
+    / kcore.py / ktruss.py loop comments.  Coreness runs on its sweep
+    path (``coreness_sweeps``): the in-task peel has no rounds.
     """
     from hypergraph_gpu_label_propagation_spark.model import Hypergraph
     from hypergraph_gpu_label_propagation_spark.operators.components import (

@@ -76,7 +76,7 @@ def test_cc_and_pagerank_broadcast_equals_shuffle(spark, hgx):
         assert pr_a[k] == pytest.approx(pr_b[k], abs=1e-12), k
 
 
-def test_coreness_broadcast_shuffle_and_cnt_sweep_identical(spark, hgx):
+def test_coreness_broadcast_shuffle_and_cnt_sweep_identical(spark, hgx, coreness_sweeps):
     from hypergraph_gpu_label_propagation_spark.operators.kcore import coreness
 
     try:
@@ -128,6 +128,21 @@ def test_freeze_scalar_counts_unchanged(spark):
         assert hg.num_edges == 91
         assert hg.incidence_rows == inc.distinct().count() or hg.incidence_rows == 999
         assert hg.incidence_by_vertex.count() == hg.incidence_by_edge.count()
+    finally:
+        hg.unpersist()
+
+
+def test_freeze_null_edge_id_is_not_an_edge(spark):
+    """A null edge_id (e.g. a non-numeric id cast to long) is not
+    counted as an edge, matching count_distinct semantics."""
+    inc = spark.createDataFrame(
+        [(0, 0), (0, 1), (1, 1), (1, 2), (None, 2), (None, 3)],
+        "edge_id long, vertex_id long",
+    )
+    hg = Hypergraph.freeze(spark, inc)
+    try:
+        assert hg.num_edges == 2
+        assert hg.num_vertices == 4
     finally:
         hg.unpersist()
 

@@ -50,7 +50,37 @@ def test_cc_resume(spark, tmp_path):
     hg.unpersist()
 
 
-def test_coreness_resume(spark, tmp_path):
+def test_coreness_in_task_snapshot_resumes_on_sweeps(spark, tmp_path):
+    """The in-task path writes one converged (u, c, _ch=0) snapshot; a
+    resume on the sweep path reads it as a fixed point and runs no
+    round, and a resume on the in-task path simply recomputes."""
+    import os
+
+    from hypergraph_gpu_label_propagation_spark.operators.kcore import coreness
+
+    hg = _hg(spark, seed=7, nv=60, ne=120)
+    ckpt = str(tmp_path / "core")
+    local = coreness(hg, checkpoint_dir=ckpt)
+    want = {r["vertex_id"]: r["coreness"] for r in local.coreness.collect()}
+    snaps = [d for d in os.listdir(ckpt) if d.startswith("coreness_superstep=")]
+    assert len(snaps) == 1
+    snap = spark.read.parquet(os.path.join(ckpt, snaps[0]))
+    assert snap.filter("_ch != 0").count() == 0
+    assert snap.count() == sum(1 for c in want.values() if c > 0)
+
+    again = coreness(hg, checkpoint_dir=ckpt, resume=True)
+    assert {r["vertex_id"]: r["coreness"] for r in again.coreness.collect()} == want
+    try:
+        spark.conf.set("spark.graft.coreness.local.maxRows", "0")
+        swept = coreness(hg, checkpoint_dir=ckpt, resume=True)
+    finally:
+        spark.conf.unset("spark.graft.coreness.local.maxRows")
+    assert {r["vertex_id"]: r["coreness"] for r in swept.coreness.collect()} == want
+    assert (swept.iterations, swept.changes_per_iter) == (1, [])
+    hg.unpersist()
+
+
+def test_coreness_resume(spark, tmp_path, coreness_sweeps):
     from hypergraph_gpu_label_propagation_spark.operators.kcore import coreness
 
     hg = _hg(spark, seed=7, nv=60, ne=120)

@@ -1,30 +1,26 @@
-"""Measure the exact level-peel alternative for full coreness (r06
-verdict "Next round #1": hybrid to the exact Batagelj-Zaversnik peel
-once the active value range collapses).
+"""Time the three exact coreness paths on one graph and assert they agree.
 
-This runs the full decomposition AS A PEEL — the exact schedule the
-hybrid's finish phase would execute — and measures its round count and
-wall against the shipped h-index sweep solution on the same graph:
+1. **in-task** — the default ``coreness()`` under its row bound: the
+   whole adjacency in one task, the Batagelj-Zaversnik level peel in
+   vectorized NumPy (``kcore.peel_coreness``).
+2. **Spark-round peel** — the same level peel with every removal batch
+   as one materialized Spark round (degree agg + the global min + an
+   anti semi-join + checkpoint):
 
-    k = 0
-    repeat until no vertex alive:
-        deg  = alive-degree of every alive vertex
-        k    = max(k, min(deg))           # next level
-        R    = {v : deg(v) <= k}          # cascade batch at level k
-        core[R] = k; remove R from the alive adjacency
+       k = 0
+       repeat until no vertex alive:
+           deg  = alive-degree of every alive vertex
+           k    = max(k, min(deg))           # next level
+           R    = {v : deg(v) <= k}          # cascade batch at level k
+           core[R] = k; remove R from the alive adjacency
 
-Every removal batch is one materialized Spark round (degree agg + the
-global min + an anti semi-join + checkpoint).  The peel is EXACT (the
-tool asserts equality against coreness()), so the comparison is purely
-about schedule cost: peel rounds = #distinct-coreness-levels plus
-within-level cascade sub-rounds, each paying the fixed per-round Spark
-cost, versus the h-index solution's ~40 Jacobi sweeps that shrink
-nothing but run 4 sweeps per materialized round.
+3. **sweeps** — ``coreness()`` forced onto its Spark h-index sweep
+   fallback with ``spark.graft.coreness.local.maxRows=0``.
 
-A hybrid "switch to peel when the frontier collapses" cannot skip the
-shell levels — coreness at level k needs every lower level already
-peeled for the alive degrees to be right — so the measured full-peel
-cost IS the hybrid finish's cost (its init phase, degrees, is trivial).
+All three are exact; the tool asserts they are equal vertex for vertex,
+so the comparison is purely schedule cost: the same peel batches as
+array work in one task, as one fixed-cost Spark round each, and the
+h-index sweeps that shrink nothing but fuse 8 sweeps per round.
 
 Usage: SPARK_GRAFT_SF_DIR=... python tools/peel_coreness.py
 """
@@ -38,7 +34,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
@@ -91,6 +86,13 @@ def peel_full(spark, half, n_part):
     return assigned, rounds, time.monotonic() - t0
 
 
+def _timed_coreness(hg, half):
+    t0 = time.monotonic()
+    res = coreness(hg, adj=half)
+    vals = {r["vertex_id"]: r["coreness"] for r in res.coreness.collect()}
+    return vals, res.iterations, time.monotonic() - t0
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("peel_coreness", cores=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
@@ -99,24 +101,23 @@ def main() -> None:
     n_pairs = half.count() * 2
     n_part = loop_partitions(n_pairs, spark.sparkContext.defaultParallelism)
 
-    t0 = time.monotonic()
-    sweep_res = coreness(hg, adj=half)
-    sweep_res.coreness.write.format("noop").mode("overwrite").save()
-    sweep_wall = time.monotonic() - t0
-
+    local_vals, local_rounds, local_wall = _timed_coreness(hg, half)
+    spark.conf.set("spark.graft.coreness.local.maxRows", "0")
+    try:
+        sweep_vals, sweep_rounds, sweep_wall = _timed_coreness(hg, half)
+    finally:
+        spark.conf.unset("spark.graft.coreness.local.maxRows")
     peeled, peel_rounds, peel_wall = peel_full(spark, half, n_part)
 
-    # exactness: peel == h-index fixed point, vertex for vertex
-    sweep_vals = {
-        r["vertex_id"]: r["coreness"] for r in sweep_res.coreness.collect()
-    }
+    # exactness: all three paths agree vertex for vertex; isolated
+    # vertices never appear in the Spark peel's adjacency (coreness 0)
     peel_vals = {r["u"]: r["core"] for r in peeled.collect()}
-    # isolated vertices never appear in the adjacency: coreness 0
     mismatches = {
-        v: (sweep_vals[v], peel_vals.get(v, 0))
-        for v in sweep_vals
-        if sweep_vals[v] != peel_vals.get(v, 0)
+        v: (local_vals[v], sweep_vals.get(v), peel_vals.get(v, 0))
+        for v in local_vals
+        if not local_vals[v] == sweep_vals.get(v) == peel_vals.get(v, 0)
     }
+    assert len(sweep_vals) == len(local_vals), (len(sweep_vals), len(local_vals))
     assert not mismatches, list(mismatches.items())[:5]
 
     print(
@@ -124,8 +125,10 @@ def main() -> None:
             {
                 "sf_dir": sf_dir,
                 "adj_pairs": n_pairs,
-                "sweep": {"sec": round(sweep_wall, 2), "rounds": sweep_res.iterations},
-                "peel": {"sec": round(peel_wall, 2), "rounds": peel_rounds},
+                "cores": spark.sparkContext.defaultParallelism,
+                "in_task": {"sec": round(local_wall, 2), "rounds": local_rounds},
+                "spark_peel": {"sec": round(peel_wall, 2), "rounds": peel_rounds},
+                "sweeps": {"sec": round(sweep_wall, 2), "rounds": sweep_rounds},
                 "levels": len(set(peel_vals.values())),
                 "exact_match": True,
             }
