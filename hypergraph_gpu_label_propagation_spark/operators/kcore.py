@@ -169,7 +169,7 @@ def _coreness_local_rows(spark) -> int:
                 "spark.graft.coreness.local.maxRows", str(CORENESS_LOCAL_MAX_ROWS)
             )
         )
-    except Exception:  # noqa: BLE001 — conservative: keep default
+    except ValueError:  # a non-integer setting: keep the default
         return CORENESS_LOCAL_MAX_ROWS
 
 

@@ -22,7 +22,11 @@ so the comparison is purely schedule cost: the same peel batches as
 array work in one task, as one fixed-cost Spark round each, and the
 h-index sweeps that shrink nothing but fuse 8 sweeps per round.
 
-Usage: SPARK_GRAFT_SF_DIR=... python tools/peel_coreness.py
+Usage: SPARK_GRAFT_CPUS=4 SPARK_DRIVER_MEMORY=4g SPARK_GRAFT_SF_DIR=...
+python tools/peel_coreness.py
+
+Set the driver heap below the host's memory: the session default is
+16 GB, and the sf0.1 run takes minutes of Spark rounds.
 """
 
 from __future__ import annotations
