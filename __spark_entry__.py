@@ -465,8 +465,10 @@ def q_lp_modularity(spark, sf_dir):
 
 def q_ktruss(spark, sf_dir):
     """k-truss (k=17) of the co-occurrence graph — the EDGE-level
-    decomposition beside kcore/coreness (operators/ktruss.py); oracle is
-    the recursive-CTE edge peel with the kcore twin's shrink guard."""
+    decomposition beside kcore/coreness (operators/ktruss.py: an exact
+    in-task NumPy peel under its pair bound, the hybrid Spark peel loop
+    above it); oracle is the recursive-CTE edge peel with the kcore
+    twin's shrink guard."""
     from hypergraph_gpu_label_propagation_spark.operators.ktruss import k_truss
 
     hg = _freeze(spark, sf_dir)

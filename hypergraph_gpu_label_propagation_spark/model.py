@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from hypergraph_gpu_label_propagation_spark.plans.tuning import conf_rows
+
 INCIDENCE_SCHEMA = "edge_id long, vertex_id long"
 LABELS_SCHEMA = "vertex_id long, label int"
 
@@ -268,15 +270,10 @@ class Hypergraph:
     GATHER_BROADCAST_MAX_ROWS = 4_000_000
 
     def _gather_broadcast_rows(self) -> int:
-        try:
-            return int(
-                self.spark.conf.get(
-                    "spark.graft.gather.broadcast.maxRows",
-                    str(self.GATHER_BROADCAST_MAX_ROWS),
-                )
-            )
-        except Exception:  # noqa: BLE001 — conservative: keep default
-            return self.GATHER_BROADCAST_MAX_ROWS
+        return conf_rows(
+            self.spark, "spark.graft.gather.broadcast.maxRows",
+            self.GATHER_BROADCAST_MAX_ROWS,
+        )
 
     def gather_to_edge(self, frame: DataFrame) -> DataFrame:
         """incidence ⋈ a one-row-per-vertex frame, planned so a

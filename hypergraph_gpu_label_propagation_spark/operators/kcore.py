@@ -49,7 +49,12 @@ from pyspark.sql import functions as F
 
 from hypergraph_gpu_label_propagation_spark.model import Hypergraph
 from hypergraph_gpu_label_propagation_spark.operators.triangles import clique_expansion
-from hypergraph_gpu_label_propagation_spark.plans.tuning import loop_conf, loop_partitions
+from hypergraph_gpu_label_propagation_spark.plans.in_task import dense_ids, map_pairs
+from hypergraph_gpu_label_propagation_spark.plans.tuning import (
+    conf_rows,
+    loop_conf,
+    loop_partitions,
+)
 
 if TYPE_CHECKING:
     import pandas as pd
@@ -162,17 +167,6 @@ class CorenessResult:
 CORENESS_LOCAL_MAX_ROWS = 8_000_000
 
 
-def _coreness_local_rows(spark) -> int:
-    try:
-        return int(
-            spark.conf.get(
-                "spark.graft.coreness.local.maxRows", str(CORENESS_LOCAL_MAX_ROWS)
-            )
-        )
-    except ValueError:  # a non-integer setting: keep the default
-        return CORENESS_LOCAL_MAX_ROWS
-
-
 def peel_coreness(u: np.ndarray, v: np.ndarray) -> tuple[np.ndarray, np.ndarray, int]:
     """Exact core numbers of the undirected graph with edges (u[i], v[i])
     by the Batagelj-Zaversnik level peel, vectorized per removal batch.
@@ -194,7 +188,7 @@ def peel_coreness(u: np.ndarray, v: np.ndarray) -> tuple[np.ndarray, np.ndarray,
     one per two vertices on a path (a 2M-vertex path peels in ~25 s on
     a 4-core host), the worst case under the row bound.
     """
-    ids, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
+    ids, inv = dense_ids(u, v)
     n, m = len(ids), len(u)
     # CSR of the symmetrized adjacency: row i lists i's neighbours
     # (inv is the source column of both directions, u-side then v-side)
@@ -234,21 +228,13 @@ def peel_coreness(u: np.ndarray, v: np.ndarray) -> tuple[np.ndarray, np.ndarray,
 def _peel_task(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """mapInPandas body of the in-task path: every (u, v) pair of the
     graph arrives in this one partition; emit (u, c) per non-isolated
-    vertex in Arrow-sized slices."""
-    # imported here, in the worker: pandas adds ~0.4 s to the package
-    # import, and only this task body needs it
-    import pandas as pd
+    vertex."""
 
-    us, vs = [], []
-    for pdf in batches:
-        us.append(pdf["u"].to_numpy(dtype=np.int64))
-        vs.append(pdf["v"].to_numpy(dtype=np.int64))
-    if not us:
-        return
-    ids, core, _ = peel_coreness(np.concatenate(us), np.concatenate(vs))
-    step = 1 << 20
-    for lo in range(0, len(ids), step):
-        yield pd.DataFrame({"u": ids[lo : lo + step], "c": core[lo : lo + step]})
+    def peel(u: np.ndarray, v: np.ndarray) -> dict[str, np.ndarray]:
+        ids, core, _ = peel_coreness(u, v)
+        return {"u": ids, "c": core}
+
+    yield from map_pairs(batches, peel)
 
 
 def _coreness_in_task(
@@ -668,7 +654,9 @@ def coreness(
     half = clique_expansion(hg).localCheckpoint(eager=True) if adj is None else adj
     # symmetrized rows = 2 x the u < v pairs (union all, no distinct)
     n_pairs = 2 * half.count()
-    if n_pairs <= _coreness_local_rows(hg.spark):
+    if n_pairs <= conf_rows(
+        hg.spark, "spark.graft.coreness.local.maxRows", CORENESS_LOCAL_MAX_ROWS
+    ):
         return _coreness_in_task(hg, half, checkpoint_dir, verbose)
     # pre-partition the symmetrized adjacency ONCE, on the key the
     # per-sweep plan needs (r08): under broadcast-gather that is the

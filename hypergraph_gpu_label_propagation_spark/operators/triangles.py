@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from hypergraph_gpu_label_propagation_spark.model import Hypergraph
-from hypergraph_gpu_label_propagation_spark.plans.tuning import loop_conf
+from hypergraph_gpu_label_propagation_spark.plans.tuning import conf_rows, loop_conf
 
 # target adjacency PAIRS per shuffle partition for the wedge join: the
 # wedge intermediate (sum of C(out-degree, 2)) inflates well past the
@@ -53,15 +53,9 @@ TRIANGLES_BROADCAST_MAX_ROWS = 16_000_000
 
 
 def _triangles_broadcast_rows(spark) -> int:
-    try:
-        return int(
-            spark.conf.get(
-                "spark.graft.triangles.broadcast.maxRows",
-                str(TRIANGLES_BROADCAST_MAX_ROWS),
-            )
-        )
-    except Exception:  # noqa: BLE001 — conservative: keep default
-        return TRIANGLES_BROADCAST_MAX_ROWS
+    return conf_rows(
+        spark, "spark.graft.triangles.broadcast.maxRows", TRIANGLES_BROADCAST_MAX_ROWS
+    )
 
 
 def _packed_key(hi: str, lo: str):

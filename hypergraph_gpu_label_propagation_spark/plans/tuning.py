@@ -56,6 +56,15 @@ def loop_partitions(
     return max(floor, min(2 * cores, math.ceil(incidence_rows / ROWS_PER_PARTITION)))
 
 
+def conf_rows(spark: SparkSession, key: str, default: int) -> int:
+    """A row bound from the session conf: ``key`` as an int, or
+    ``default`` when it is unset or not an integer."""
+    try:
+        return int(spark.conf.get(key, str(default)))
+    except ValueError:  # a non-integer setting: keep the default
+        return default
+
+
 @contextmanager
 def loop_conf(spark: SparkSession, partitions: int, adaptive: bool = False):
     """Scope (shuffle.partitions, adaptive.enabled) to a driver loop and

@@ -25,6 +25,16 @@ def coreness_sweeps(spark):
     spark.conf.unset("spark.graft.coreness.local.maxRows")
 
 
+@pytest.fixture
+def ktruss_spark_loop(spark):
+    """Force k_truss onto its Spark peel loop: with a 0-pair in-task
+    bound every graph is over it, so round-level behaviour stays
+    pinned."""
+    spark.conf.set("spark.graft.ktruss.local.maxRows", "0")
+    yield
+    spark.conf.unset("spark.graft.ktruss.local.maxRows")
+
+
 def incidence_from_edges(spark, edges):
     """Build an incidence DataFrame from a python list-of-lists."""
     rows = [(e, int(v)) for e, members in enumerate(edges) for v in members]

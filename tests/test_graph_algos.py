@@ -380,6 +380,88 @@ def test_ktruss_clique_plus_chain(spark):
     hg.unpersist()
 
 
+def _peel_truss(pairs, k):
+    """Textbook k-truss: drop every pair in fewer than k - 2 triangles of
+    the surviving graph until none is left to drop."""
+    alive = set(pairs)
+    while True:
+        nbrs = {}
+        for a, b in alive:
+            nbrs.setdefault(a, set()).add(b)
+            nbrs.setdefault(b, set()).add(a)
+        drop = {(a, b) for a, b in alive if len(nbrs[a] & nbrs[b]) < k - 2}
+        if not drop:
+            return alive
+        alive -= drop
+
+
+def test_ktruss_in_task_peel_equals_forced_spark_loop_and_peel(spark):
+    """The in-task NumPy peel, the Spark peel loop (forced with a 0-pair
+    bound) and a textbook peel agree.  The graph is random hyperedges,
+    a K8 and a pendant chain off it; at k=7 the loop's first rounds are
+    mass peels (support recomputed), at k=5 every round decrements."""
+    from hypergraph_gpu_label_propagation_spark.operators.ktruss import k_truss
+
+    edges = (
+        _rng_hypergraph(5, nv=40, ne=40)
+        + [list(range(40, 48))]
+        + [[47, 48], [48, 49], [49, 50]]
+    )
+    hg = _freeze(spark, edges, 51)
+    pairs = sorted({(a, b) for ms in edges for a in ms for b in ms if a < b})
+
+    def members(res):
+        return {(r["u"], r["v"]) for r in res.membership.collect() if r["in_truss"] == 1}
+
+    for k, branches in ((7, ["mass", "mass", "dec", "dec"]), (5, ["dec"] * 4)):
+        want = _peel_truss(pairs, k)
+        fast = k_truss(hg, k=k)
+        spark.conf.set("spark.graft.ktruss.local.maxRows", "0")
+        try:
+            loop = k_truss(hg, k=k)
+        finally:
+            spark.conf.unset("spark.graft.ktruss.local.maxRows")
+        assert members(fast) == members(loop) == want, k
+        assert fast.truss_size == loop.truss_size == len(want)
+        assert fast.membership.count() == len(pairs)
+        assert fast.iterations == 1
+        assert fast.removed_per_iter == [len(pairs) - len(want)]
+        # non-vacuity: the Spark loop took the branches named above
+        alive, taken = len(pairs), []
+        for removed in loop.removed_per_iter:
+            taken.append("mass" if removed >= alive - removed else "dec")
+            alive -= removed
+        assert taken == branches, (k, loop.removed_per_iter)
+    # K8 pairs sit in 6 triangles: the clique is the 7-truss, the
+    # chain and most random pairs are not
+    assert _peel_truss(pairs, 7) == {(a, b) for a in range(40, 48) for b in range(a + 1, 48)}
+    hg.unpersist()
+
+
+def test_peel_truss_arrays_wide_ids():
+    """peel_truss maps ids densely: ids past 2^32 give the textbook
+    truss, and the flags stay aligned with the input rows.  On this
+    random graph k=5 needs both peel branches exact: recomputes that
+    skip dead closing pairs and decrements that count a triangle
+    losing two pairs in one batch once."""
+    from hypergraph_gpu_label_propagation_spark.operators.ktruss import peel_truss
+
+    rng = np.random.default_rng(5)
+    pairs = sorted(
+        {(int(min(a, b)), int(max(a, b))) for a, b in rng.integers(0, 25, (150, 2)) if a != b}
+    )
+    rows = rng.permutation(len(pairs))
+    base = 3 * 2**33
+    u = np.array([pairs[i][0] for i in rows], dtype=np.int64) * 2**32 + base
+    v = np.array([pairs[i][1] for i in rows], dtype=np.int64) * 2**32 + base
+    for k in (4, 5):
+        want = _peel_truss(pairs, k)
+        in_truss, batches = peel_truss(u, v, k)
+        got = {pairs[i] for i, flag in zip(rows, in_truss) if flag}
+        assert want and got == want, k
+        assert batches >= 1
+
+
 def test_neighborhood_sampling_deterministic_and_bounded(spark):
     """GraphSAGE-style hash-ranked fanout sampling: per-hop fanout caps
     hold exactly, output is a subset of the real incidence, the sample

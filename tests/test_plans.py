@@ -123,7 +123,7 @@ def test_loop_conf_restores_on_error(spark):
     assert loop_partitions(10**12, 32) == 64  # cap 2x cores (round-4 A/B)
 
 
-def test_iterative_state_stats_stay_linear(spark, coreness_sweeps):
+def test_iterative_state_stats_stay_linear(spark, coreness_sweeps, ktruss_spark_loop):
     """r05 verdict #4: the BigInt-stats planning pathology as a pytest.
 
     localCheckpoint (LogicalRDD) PRESERVES origin sizeInBytes and
@@ -136,7 +136,8 @@ def test_iterative_state_stats_stay_linear(spark, coreness_sweeps):
     a squaring shape multiplies bits by 2^(extra rounds) and fails
     unmistakably.  Referenced from label_propagation.py / components.py
     / kcore.py / ktruss.py loop comments.  Coreness runs on its sweep
-    path (``coreness_sweeps``): the in-task peel has no rounds.
+    path (``coreness_sweeps``) and k-truss on its Spark peel loop
+    (``ktruss_spark_loop``): the in-task peels have no rounds.
     """
     from hypergraph_gpu_label_propagation_spark.model import Hypergraph
     from hypergraph_gpu_label_propagation_spark.operators.components import (
